@@ -162,7 +162,7 @@ def summary_pairs(cfg: ConfigSpec) -> list[tuple[str, str, str]]:
     """(issue, field, pattern) triples in (issue asc, field asc) order — the
     STATIC field catalog every consumer shares: the parse stage extracts one
     per-line hit column per pair (functions/fieldex.py), the fused summary
-    and `field_contents` aggregate those columns by position k, and the
+    (`summary_aggregate`) aggregates those columns by position k, and the
     assembly (`summary_frame`) renders them. The order is deterministic so
     positional column names (schema.fld_col) mean the same pair everywhere."""
     pairs: list[tuple[str, str, str]] = []

@@ -12,7 +12,7 @@ Python touches only HIT rows (building the per-row match lists) — on real
 logs a few percent of rows — so per-row Python cost scales with matches,
 not input size. Output is the flat per-issue-column schema of
 functions/schema.py (no map columns: 3× cheaper to materialize and prune).
-The pandas implementation in parse.py is the portability fallback.
+This is the only parse implementation; parse.py wraps it in ``mapInArrow``.
 """
 
 from __future__ import annotations

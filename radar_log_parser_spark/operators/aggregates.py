@@ -6,9 +6,9 @@ the reference's implicit string-scan order (SURVEY.md §2.4). Spark performs
 partial (map-side) aggregation for all of these automatically, so skewed
 sources do not concentrate pre-aggregation rows on one reducer.
 
-Field contents (A4/F5) are computed distributed: per-row
-``regexp_extract_all`` (JVM, codegen) → sum of counts + order-preserving
-collect. This equals the reference's findall-over-joined-content
+Field contents (A4/F5) are aggregated from the per-line hit columns the
+parse stage extracts (functions/fieldex.py): sum of counts + order-
+preserving collect. This equals the reference's findall-over-joined-content
 (getFieldContent, analyzeLog.go:305-313) because field patterns cannot match
 across line boundaries (config lint guarantees the RE2 subset; `.`/char
 classes do not cross `\n`).
@@ -73,60 +73,6 @@ def grouped_counts(grouped_routed: DataFrame) -> DataFrame:
     return grouped_routed.groupBy("source", "issue", "group_key", "details").agg(
         F.count("*").alias("count")
     )
-
-
-def grouped_totals(grouped_routed: DataFrame) -> DataFrame:
-    """A3 issue total = sum of tuple counts = matched-line count
-    (analyzeLog.go:258-264), plus the LAST matching line for the grouped
-    Timestamp/LogLevel extracts (last_matches, analyzeLog.go:204-221).
-    Standalone form; the pipeline summary uses summary_aggregate."""
-    return grouped_routed.groupBy("source", "issue").agg(
-        F.count("*").alias("number"),
-        F.max_by("text", _line_ord()).alias("last_line"),
-    )
-
-
-def with_field_hits(cfg: ConfigSpec, scope: DataFrame) -> DataFrame:
-    """JVM twin of the PARSE-TIME per-line field extraction
-    (functions/fieldex.py): derives the fld{k} struct<n,j> columns at line
-    grain with `regexp_extract_all`. The pipeline gets these columns free
-    from parse_stage; this twin serves callers holding a scope frame built
-    without them (tests, ad-hoc frames) and doubles as the
-    parity-testable JVM expression of the extraction semantics. Quirk Q10
-    preserved: grouped pairs scan the row's full `text` (every scoped
-    line, matching or not); non-grouped pairs scan each MATCH SUBSTRING
-    in order, zero-hit substrings contributing nothing."""
-    from radar_log_parser_spark.functions.schema import fld_col
-
-    cols = []
-    for k, (iname, fname, pat) in enumerate(summary_pairs(cfg)):
-        if cfg.issues[iname].grouped:
-            hits = F.when(
-                F.col("grouped") & (F.col("issue") == iname),
-                F.regexp_extract_all("text", F.lit(pat), 0),
-            )
-        else:
-            # flatten preserves (match_pos, hit) order — identical to the
-            # per-subject join since "\n" separates both levels
-            hits = F.when(
-                ~F.col("grouped") & (F.col("issue") == iname),
-                F.flatten(
-                    F.transform(
-                        "match_arr",
-                        lambda m: F.regexp_extract_all(m, F.lit(pat), 0),
-                    )
-                ),
-            )
-        cols.append(
-            F.when(
-                F.size(hits) > 0,
-                F.struct(
-                    F.size(hits).cast("int").alias("n"),
-                    F.array_join(hits, "\n").alias("j"),
-                ),
-            ).alias(fld_col(k, iname, fname))
-        )
-    return scope.select("*", *cols)
 
 
 def line_grain_hit_agg(
@@ -228,40 +174,6 @@ def line_grain_hit_agg(
     return lvl1.groupBy("source", "issue").agg(*aggs2)
 
 
-def field_contents(cfg: ConfigSpec, scope: DataFrame) -> DataFrame:
-    """A4/F5 per-issue field extraction → (source, issue, field, n, joined).
-    Standalone form: the shared line-grain builder (`line_grain_hit_agg`,
-    also the engine of the fused pipeline summary) unpivoted with `stack`.
-    Accepts a scope with or without the parse-time fld columns (the JVM
-    twin derives them when absent)."""
-    pairs = _summary_pairs(cfg)
-    if not pairs:
-        return None  # type: ignore[return-value]
-
-    from radar_log_parser_spark.functions.schema import fld_cols
-
-    if fld_cols(cfg)[0] not in scope.columns:
-        scope = with_field_hits(cfg, scope)
-    lvl2 = line_grain_hit_agg(scope, pairs)
-
-    stack_args = ", ".join(
-        f"'{fname}', N{k}, J{k}" for k, (_i, fname, _p) in enumerate(pairs)
-    )
-    return (
-        lvl2.select(
-            "source", "issue",
-            F.expr(f"stack({len(pairs)}, {stack_args}) as (field, n, joined)"),
-        )
-        # null n = pair belongs to a different issue; 0 = issue scoped but the
-        # field never hit (the reference renders those as "0 :  " downstream)
-        .filter(F.col("n") > 0)
-    )
-
-
-# canonical (issue, field, pattern) catalog — see config.summary_pairs
-_summary_pairs = summary_pairs
-
-
 def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
     """ONE two-level aggregation producing EVERYTHING the summary needs per
     (source, issue): the non-grouped totals + first/last match (A1/A5), the
@@ -274,8 +186,11 @@ def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
     aggregation. r5: the aggregation runs at LINE GRAIN over PARSE-TIME
     hit columns (functions/fieldex.py) — no subject explode/union, no
     regex, and no full-text traffic left in this job; the field machinery
-    lives in the shared `line_grain_hit_agg` builder (also the engine of
-    the standalone `field_contents`).
+    lives in the shared `line_grain_hit_agg` builder.
+
+    `scope_slim` is the pipeline's slim scope: (source, issue, proc_rank,
+    grouped, line_no, text, grp_arr) plus the line-local match scalars
+    n_ng / first_m / last_m and the parse-time fld{k} columns.
 
     first/last selections merge across the two levels by carrying the
     packed scan-order key next to each partial min_by/max_by: the key is
@@ -283,39 +198,21 @@ def summary_aggregate(cfg: ConfigSpec, scope_slim: DataFrame) -> DataFrame:
     min_by(partial_value, partial_key) reproduces the global selection.
     Non-grouped first/last are line-local projections (match_arr is in
     scan order, so the issue's first match is element 1 of the minimal
-    line's array and the last is element -1 of the maximal line's).
+    line's array and the last is element -1 of the maximal line's); the
+    slim scope carries them as first_m / last_m.
     """
-    pairs = _summary_pairs(cfg)
-    from radar_log_parser_spark.functions.schema import fld_cols
-
-    if pairs and fld_cols(cfg)[0] not in scope_slim.columns:
-        scope_slim = with_field_hits(cfg, scope_slim)
-
-    if "n_ng" in scope_slim.columns:
-        # pipeline slim scope: match_arr already reduced to the three
-        # line-local scalars the aggregation needs (pipeline.py) — the
-        # materialized blocks never carry the substrings
-        n_ng = F.col("n_ng")
-        first_m, last_m = F.col("first_m"), F.col("last_m")
-    else:
-        n_ng = F.size(F.coalesce(F.col("match_arr"), F.array()))
-        # try_: ANSI element_at throws on the empty arrays of non-matching
-        # lines (the values are only consumed where ng_ord is non-null,
-        # but the projection evaluates every row)
-        first_m = F.try_element_at("match_arr", F.lit(1))
-        last_m = F.try_element_at("match_arr", F.lit(-1))
     is_match = F.size(F.coalesce(F.col("grp_arr"), F.array())) > 0
-    ng_ord = F.when(~F.col("grouped") & (n_ng > 0), _line_ord())
+    ng_ord = F.when(~F.col("grouped") & (F.col("n_ng") > 0), _line_ord())
     g_ord = F.when(F.col("grouped") & is_match, _line_ord())
 
     return line_grain_hit_agg(
         scope_slim,
-        pairs,
+        summary_pairs(cfg),
         extra_row_cols=(
-            n_ng.alias("n_ng"),
+            F.col("n_ng"),
             F.col("grouped"),
-            first_m.alias("first_m"),
-            last_m.alias("last_m"),
+            F.col("first_m"),
+            F.col("last_m"),
             F.col("text"),
             ng_ord.alias("ng_ord"),
             g_ord.alias("g_ord"),
@@ -361,7 +258,7 @@ def summary_frame(
     RE2-subset ASCII semantics, so the extracts agree with the Python
     oracle on any content (ADVICE r3: \\d/\\w/\\b are ASCII everywhere
     now). Content never touches the driver unless the caller collects."""
-    pairs = _summary_pairs(cfg)
+    pairs = summary_pairs(cfg)
     issues_rows = [
         (iname, cfg.issues[iname].grouped, int(cfg.priority.get(iname, 0)))
         for iname in sorted(cfg.issues)

@@ -191,8 +191,8 @@ def other_matches(scope: DataFrame) -> DataFrame:
 
 
 def grouped_matches(scope: DataFrame) -> DataFrame:
-    """Aggregation-width F4 rows (text kept: grouped_totals needs the last
-    matching line for the summary's Timestamp/LogLevel extracts)."""
+    """Aggregation-width F4 rows (text kept: the summary needs the last
+    matching line for its Timestamp/LogLevel extracts)."""
     return scope.filter(F.col("grouped") & (F.size("grp_arr") > 0)).select(
         "source", "issue", "proc_rank", "line_no", "text",
         F.element_at("grp_arr", 1).alias("group_key"),

@@ -45,16 +45,16 @@ ENGINE_VERSION = "0.1.0"
 SALT_MOD = 16
 
 
-def salted_repartition(df: DataFrame, key: str, buckets: int, salt_mod: int = SALT_MOD) -> DataFrame:
+def salted_repartition(df: DataFrame, key: str, buckets: int) -> DataFrame:
     """Repartition by (key, salt) for LOW-CARDINALITY keys (source/process):
     plain repartition(key) sends a hot source's entire shard to ONE task —
     at 10^12 rows a 90%-hot source serializes the write. The salt (a stable
-    hash of doc_id mod salt_mod) fans each key over up to salt_mod tasks
+    hash of doc_id mod SALT_MOD) fans each key over up to SALT_MOD tasks
     while keeping rows of one (key, salt) cell co-located, so per-source
     consumers still prune. (North rule: 'salted repartition for
     source-skewed shards'.)"""
     return df.repartition(
-        buckets, F.col(key), F.pmod(F.xxhash64("doc_id"), F.lit(salt_mod))
+        buckets, F.col(key), F.pmod(F.xxhash64("doc_id"), F.lit(SALT_MOD))
     )
 
 
@@ -254,7 +254,6 @@ class Pipeline:
         work_dir: str | None = None,
         checkpoint: bool = False,
         fmt: str = "parquet",
-        buckets: int | None = None,
     ):
         self.spark = spark
         self.cfg = cfg
@@ -262,7 +261,7 @@ class Pipeline:
         self.input_path = input_path
         self.checkpoint = checkpoint
         self.ckpt = Checkpointer(spark, work_dir, fmt) if checkpoint else None
-        self.buckets = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        self.buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # vocab CONTENT hash: a changed vocab of identical size must
         # invalidate every checkpoint (decoded text changes everywhere)
         vocab_fp = hashlib.sha256(
@@ -461,23 +460,21 @@ class Pipeline:
 
         # Aggregation reads a SLIM scope: every aggregate keys on
         # (source, issue, proc_rank, line_no) plus the match arrays, and
-        # needs `text` only on grouped MATCHING rows (grouped_totals' /
-        # the fused summary's last-line extract) — field scanning no
-        # longer needs any text because the per-line hits are extracted
-        # at PARSE time (functions/fieldex.py, r5) and ride along as the
-        # sparse fld{k} struct columns. The projection drops
-        # tokens/n_tok/doc_id/process entirely and nulls text on
-        # everything but grouped matches. Checkpoint mode gets pruning
-        # from parquet; in
-        # bench mode the slim frame is materialized (serialized eager
-        # localCheckpoint) by DEFAULT: the summary DAG's three aggregate
-        # subtrees otherwise re-derive it from the fat parsed blocks —
-        # 3 full-row decodes of memory traffic, the resource the 4N leg is
-        # ceiling-bound on (A/B: summary job 186→85 s at 16 cores,
-        # BENCH/BASELINE.md). RLPS_BENCH_SLIM=off restores the lazy form
-        # for A/B. The materialization runs in the MAIN thread but the
-        # tier-0/1 jobs above are already draining in the pool underneath
-        # it — the window is overlapped, not serial.
+        # needs `text` only on grouped MATCHING rows (the fused summary's
+        # last-line extract) — field scanning no longer needs any text
+        # because the per-line hits are extracted at PARSE time
+        # (functions/fieldex.py, r5) and ride along as the sparse fld{k}
+        # struct columns. The projection drops tokens/n_tok/doc_id/process
+        # entirely and nulls text on everything but grouped matches.
+        # Checkpoint mode gets pruning from parquet; in bench mode the slim
+        # frame is materialized (serialized eager localCheckpoint): the
+        # summary DAG's three aggregate subtrees otherwise re-derive it
+        # from the fat parsed blocks — 3 full-row decodes of memory
+        # traffic, the resource the 4N leg is ceiling-bound on (summary
+        # job 186→85 s at 16 cores, BENCH/BASELINE.md). The
+        # materialization runs in the MAIN thread but the tier-0/1 jobs
+        # above are already draining in the pool underneath it — the
+        # window is overlapped, not serial.
         from radar_log_parser_spark.functions.schema import fld_cols
 
         # match_arr itself stays behind: the aggregates only need the match
@@ -497,7 +494,7 @@ class Pipeline:
             "grp_arr",
             *fld_cols(cfg),
         )
-        if self.ckpt is None and os.environ.get("RLPS_BENCH_SLIM", "lc") == "lc":
+        if self.ckpt is None:
             from pyspark import StorageLevel
 
             s = time.monotonic()
@@ -505,7 +502,6 @@ class Pipeline:
                 eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
             )
             self.timings["slim_materialize"] = round(time.monotonic() - s, 2)
-        self._scope_slim = scope_slim
         ready("scoped_slim", scope_slim)
 
         # ---- tier 2: slim-scope consumers, straggler (summary) FIRST
@@ -524,18 +520,19 @@ class Pipeline:
         # every token array and text string just to list a handful of
         # sources; the parquet scan reads the dictionary-encoded source
         # column alone (parse preserves source 1:1, so the sets are equal).
-        summary = agg.summary_frame(
-            spark,
-            cfg,
-            raw.select("source").distinct(),
-            agg.summary_aggregate(cfg, scope_slim),
+        summary = self._stage(
+            "summary",
+            lambda: agg.summary_frame(
+                spark,
+                cfg,
+                raw.select("source").distinct(),
+                agg.summary_aggregate(cfg, scope_slim),
+            ),
+            parents=["scoped"],
         )
         if self.ckpt is not None:
-            fp = _fingerprint(self._root_fp, "summary", "other_routed", "grouped_routed")
-            self.metrics.append(self.ckpt.write("summary", summary, fp, ["other_routed", "grouped_routed", "scoped"]))
-            summary = self.ckpt.read("summary").orderBy(
-                "source", F.desc("priority"), F.asc("issue")
-            )
+            # a parquet read does not keep the written row order
+            summary = summary.orderBy("source", F.desc("priority"), F.asc("issue"))
         ready("summary", summary)
 
         grouped_issues = self._stage(

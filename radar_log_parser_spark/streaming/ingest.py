@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from radar_log_parser_spark.codec import Vocab
 from radar_log_parser_spark.config import ConfigSpec
 from radar_log_parser_spark.functions.parse import parse_stage
-from radar_log_parser_spark.sources.fixtures import ARROW_SCHEMA  # noqa: F401
 
 
 INPUT_DDL = "doc_id string, tokens array<int>, n_tok int, source string"

@@ -108,19 +108,3 @@ def test_quirk_q1_lonelyproc_dropped(pipeline_result):
     assert "LonelyProc" not in procs
     assert {"CameraService", "AudioFlinger"} <= procs
 
-
-def test_arrow_pandas_parse_parity(spark, cfg, vocab, fx):
-    """The Arrow/RE2 hot path and the pandas/Python-re fallback must produce
-    identical parse output (dialect parity within the RE2-linted subset)."""
-    from radar_log_parser_spark.functions.parse import parse_stage
-
-    def snapshot(impl):
-        df = parse_stage(spark.read.parquet(fx.logs_path), cfg, vocab, impl=impl)
-        cols = [c for c in df.columns if c not in ("tokens", "n_tok")]
-        rows = df.select(*cols).collect()
-        return sorted(
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-            for r in rows
-        )
-
-    assert snapshot("arrow") == snapshot("pandas")

@@ -54,6 +54,7 @@ def test_summary_is_distributed(spark):
     DataFrame whose plan carries the aggregates — nothing driver-side
     scales with the corpus (r4: the aggregates fused into ONE two-level
     pass over the slim scope)."""
+    from radar_log_parser_spark.functions.schema import fld_cols
     from radar_log_parser_spark.operators.aggregates import (
         summary_aggregate,
         summary_frame,
@@ -71,14 +72,19 @@ def test_summary_is_distributed(spark):
     )
     sources = spark.createDataFrame([("s1",), ("s2",)], "source string")
     # slim-scope rows: matches in scan order are "boom level=E xa" (line 10),
-    # then "boom xb", "boom 12:34" (line 11, left-to-right)
+    # then "boom xb", "boom 12:34" (line 11, left-to-right), reduced to the
+    # match count, first/last match and the per-line Fld hits {n, j}
+    (fld,) = fld_cols(cfg)
     slim = spark.createDataFrame(
         [
-            ("s1", "I1", 0, False, 10, None, ["boom level=E xa"], None),
-            ("s1", "I1", 0, False, 11, None, ["boom xb", "boom 12:34"], None),
+            ("s1", "I1", 0, False, 10, None, 1, "boom level=E xa",
+             "boom level=E xa", None, {"n": 1, "j": "xa"}),
+            ("s1", "I1", 0, False, 11, None, 2, "boom xb", "boom 12:34", None,
+             {"n": 1, "j": "xb"}),
         ],
         "source string, issue string, proc_rank int, grouped boolean, "
-        "line_no long, text string, match_arr array<string>, grp_arr array<string>",
+        "line_no long, text string, n_ng int, first_m string, last_m string, "
+        f"grp_arr array<string>, {fld} struct<n:int, j:string>",
     )
     df = summary_frame(spark, cfg, sources, summary_aggregate(cfg, slim))
     rows = {(r["source"], r["issue"]): r for r in df.collect()}
